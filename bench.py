@@ -575,6 +575,7 @@ def main() -> None:
         sf = -1.0
 
     from cubert_spark import get_session
+    from cubert_spark.session import codegen_compiles
     from cubert_spark.queries import (
         all_queries,
         extra_bench_queries,
@@ -609,9 +610,16 @@ def main() -> None:
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     raw_runs: dict[str, list[float]] = {}
+    # Janino compilations during each row's timed runs: a steady
+    # session compiles nothing, so a non-zero row regenerates code
+    compiles: dict[str, int] = {}
 
-    def _timed_run(fn) -> float:
-        return timed_run(spark, fn, sf_dir)
+    def _timed_runs(name: str, n: int) -> list[float]:
+        fn = queries.get(name) or _extra[name]
+        c0 = codegen_compiles(spark)
+        runs = [timed_run(spark, fn, sf_dir) for _ in range(n)]
+        compiles[name] = compiles.get(name, 0) + codegen_compiles(spark) - c0
+        return runs
 
     def _set_row(name: str, runs: list[float]) -> None:
         raw_runs[name] = runs
@@ -623,8 +631,7 @@ def main() -> None:
         )
 
     for name in BENCH_QUERIES:
-        fn = queries.get(name) or _extra[name]
-        _set_row(name, [_timed_run(fn) for _ in range(n_runs)])
+        _set_row(name, _timed_runs(name, n_runs))
         print(
             f"# {name}: min={timings[name]:.3f}s runs={raw_runs[name]}",
             file=sys.stderr,
@@ -688,8 +695,7 @@ def main() -> None:
             key=BENCH_QUERIES.index,
         )
         for name in requeued:
-            fn = queries.get(name) or _extra[name]
-            extra_runs = [_timed_run(fn) for _ in range(2)]
+            extra_runs = _timed_runs(name, 2)
             _set_row(name, raw_runs[name] + extra_runs)
             print(
                 f"# requeue {name}: min={timings[name]:.3f}s "
@@ -769,6 +775,7 @@ def main() -> None:
         "medians": medians,
         "runs": raw_runs,
         "spreads": spreads,
+        "codegen_compiles": compiles,
         "n_runs_per_query": n_runs,
         "requeued": requeued,
         "still_regressed": still_regressed,

@@ -11,6 +11,7 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 #: The driver-generated star schema (TESTDATA.md).
 STAR_TABLES = (
@@ -29,21 +30,82 @@ STAR_TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: Session confs that change the schema Spark infers from parquet; each
+#: is part of the schema memo's key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: Parquet schemas already known to this process: absolute path ->
+#: (identity, schema), one entry per path, replaced when the file at the
+#: path changes. Cubert fixed a dataset's schema at LOAD; here a plain
+#: ``spark.read.parquet`` fires a one-task inference job on every read,
+#: so each file's schema is inferred once and later reads pass it to
+#: ``spark.read.schema``.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple[str, tuple] | None:
+    """(absolute path, identity), where the identity is the file's
+    device, inode, size and mtime plus the inference confs; None where
+    no identity can be had (URI-schemed or missing paths), which keeps
+    those reads inferring. A rewrite that keeps inode, size and mtime
+    alike is not seen."""
+    if _is_uri_schemed(path):
+        return None
+    path = os.path.abspath(path)
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return path, (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, *confs)
+
+
+def _remember_schema(spark: SparkSession, path: str, schema: T.StructType) -> None:
+    """Record the schema of parquet the engine has just written at
+    ``path``, so reading it back infers nothing. Spark makes a schema
+    given to a file source nullable throughout, as inference does."""
+    key = _schema_key(spark, path)
+    if key is not None:
+        _SCHEMAS[key[0]] = (key[1], schema)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred at most once
+    per file identity. A directory's inferred schema is not memoized:
+    its own stat does not change when a part file inside is rewritten
+    in place. Directories the engine wrote are covered by
+    _remember_schema."""
+    key = _schema_key(spark, path)
+    if key is not None:
+        ident, schema = _SCHEMAS.get(key[0], (None, None))
+        if ident == key[1]:
+            return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None and os.path.isfile(path):
+        _SCHEMAS[key[0]] = (key[1], df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one parquet table from a scale-factor directory.
+    """Load one parquet table from a scale-factor directory, inferring
+    its schema once per session (_read_parquet).
 
     TIMESTAMP(NANOS) parquet columns arrive as long nanos (see
     session.SCALE_DEFAULTS) and are converted to TIMESTAMP_NTZ at
     micro precision, truncating like DuckDB/Arrow do.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     if name == "events":
         # Self-sufficient under ANY session (e.g. a driver-created one
         # without our defaults): nanosAsLong is runtime-settable.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn(
             "ts",
@@ -360,7 +422,7 @@ def merge_upsert(
 
     from pyspark.sql import functions as F
 
-    base = spark.read.parquet(path)
+    base = _read_parquet(spark, path)
     dkeys = delta.select(*key_cols).distinct()
     keep = base.join(F.broadcast(dkeys), list(key_cols), "left_anti")
     ins = delta
@@ -377,6 +439,7 @@ def merge_upsert(
     os.rename(path, bak)
     os.rename(staged, path)
     shutil.rmtree(bak, ignore_errors=True)
+    _remember_schema(spark, path, merged.schema)
 
 
 def vacuum_versions(

@@ -19,7 +19,8 @@ the timed region — deterministically unpersists the backing RDDs of
 every PRIOR run. Within a run nothing is released, so the checkpoint
 semantics (compute once, every consumer reads blocks) are unchanged;
 across runs nothing survives, so every timed run still computes from
-the parquet inputs alone.
+the parquet inputs alone. DataFrames cached through :func:`run_persist`
+are released by the same call.
 """
 
 from __future__ import annotations
@@ -27,6 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _LIVE: list[DataFrame] = []
+#: run_persist'ed DataFrames: released with the checkpoints, not counted
+_PERSISTED: list[DataFrame] = []
+
+
+def run_persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` for the current run: the cache is dropped by the
+    next :func:`release_checkpoints`, like the checkpoints' blocks."""
+    out = df.persist()
+    _PERSISTED.append(out)
+    return out
 
 
 def lazy_checkpoint(df: DataFrame) -> DataFrame:
@@ -53,30 +64,34 @@ _RELEASE_FAILURES = 0
 
 
 def release_checkpoints() -> int:
-    """Unpersist the backing RDD of every registered checkpoint and
-    clear the ledger; returns how many were released. Callers invoke
-    this only between query constructions (the per-run reset hook), so
-    every registered DataFrame is already dead to its consumers —
-    unpersisting a truncated-lineage RDD is then a pure storage
-    release, never a recompute hazard.
+    """Unpersist the backing RDD of every registered checkpoint, drop
+    every :func:`run_persist` cache and clear the ledger; returns how
+    many checkpoints were released. Callers invoke this only between
+    query constructions (the per-run reset hook), so every registered
+    DataFrame is already dead to its consumers — unpersisting a
+    truncated-lineage RDD is then a pure storage release, never a
+    recompute hazard.
 
     Contract (enforced by tests/test_checkpoints.py): every ledger
-    entry releases — the return value equals the number registered,
-    and the session's persistent-RDD map is empty afterwards. A
-    swallowed failure is counted in ``_RELEASE_FAILURES`` and logged
-    once per call, so a py4j-chain break under a Spark upgrade is a
-    visible warning, not silent litter."""
+    entry releases — the return value equals the number of checkpoints
+    registered, and the session's persistent-RDD map and cache manager
+    are back where they were before the run. A swallowed failure is
+    counted in ``_RELEASE_FAILURES`` and logged once per call, so a
+    py4j-chain break under a Spark upgrade is a visible warning, not
+    silent litter."""
     global _RELEASE_FAILURES
     n = 0
     failed = 0
-    for df in _LIVE:
+    for i, df in enumerate(_LIVE + _PERSISTED):
+        checkpoint = i < len(_LIVE)
         try:
             sc = df.sparkSession._sc
-            if sc._jsc is None:  # context stopped (atexit ordering):
-                n += 1  # the JVM took the blocks with it — released
-                continue
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            n += 1
+            if sc._jsc is not None:  # else the JVM took the blocks with it
+                if checkpoint:
+                    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+                else:
+                    df._jdf.unpersist(False)
+            n += checkpoint
         except Exception:  # noqa: BLE001 - best-effort storage release
             failed += 1
     if failed:
@@ -85,11 +100,12 @@ def release_checkpoints() -> int:
         _RELEASE_FAILURES += failed
         print(
             f"WARNING: release_checkpoints failed to unpersist {failed}/"
-            f"{len(_LIVE)} registered checkpoints (total failures this "
+            f"{len(_LIVE) + len(_PERSISTED)} registered entries (total failures this "
             f"process: {_RELEASE_FAILURES}) — localCheckpoint blocks may "
             "accumulate across runs; check the private py4j release "
             "chain against this Spark version",
             file=sys.stderr,
         )
     _LIVE.clear()
+    _PERSISTED.clear()
     return n

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from cubert_spark.checkpoints import eager_checkpoint, lazy_checkpoint
+from cubert_spark.checkpoints import eager_checkpoint, lazy_checkpoint, run_persist
 
 
 def _cc_union_find(sym: DataFrame) -> DataFrame:
@@ -87,10 +87,11 @@ def connected_components(
       ``small_graph_edges=0`` to force this path.
 
     Storage ownership: the returned DataFrame is persisted (callers
-    typically consume it several times; ``.unpersist()`` it when
-    done). Intermediate rounds unpersist eagerly; localCheckpoint
-    blocks (the edge set + every ``checkpoint_every``-th round) are
-    reclaimed by the ContextCleaner once unreferenced.
+    typically consume it several times) through the checkpoint ledger,
+    so the next ``release_checkpoints()`` drops it together with the
+    localCheckpoint blocks (the edge set + every
+    ``checkpoint_every``-th round). Intermediate rounds unpersist
+    eagerly.
     """
     # The edge set is static across iterations but its lineage (minhash
     # banding, shingle joins, ...) is expensive — checkpoint it ONCE so
@@ -102,7 +103,7 @@ def connected_components(
         .transform(eager_checkpoint)
     )
     if small_graph_edges and sym.count() <= small_graph_edges:
-        return _cc_union_find(sym).persist()
+        return run_persist(_cc_union_find(sym))
     labels = sym.select("u").distinct().withColumn("label", F.col("u"))
 
     for i in range(max_iter):
@@ -123,7 +124,7 @@ def connected_components(
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
             new_labels = new_labels.transform(eager_checkpoint)
         else:
-            new_labels = new_labels.persist()
+            new_labels = run_persist(new_labels)
         # round 1 always changes labels when any edge exists (every
         # non-minimum vertex adopts a smaller neighbor label), so the
         # convergence probe — an extra Spark action — starts at round 2

@@ -712,7 +712,7 @@ def q_merge_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     price) and DELETES keys ≡ 3 (mod 17) among them, read back and
     aggregate. The oracle computes the same merge relationally — the
     storage swap must be exactly the anti-join ∪ inserts algebra."""
-    from cubert_spark.catalog import merge_upsert
+    from cubert_spark.catalog import _read_parquet, _remember_schema, merge_upsert
 
     o = load_table(spark, sf, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -728,10 +728,12 @@ def q_merge_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         # base write + merge belong in ONE memoized step: re-merging
         # an already-merged table would double the prices again
         o.write.mode("overwrite").parquet(p)
+        # merge_upsert reads the base back with the writer's schema
+        _remember_schema(spark, p, o.schema)
         merge_upsert(spark, p, delta, ["o_orderkey"], delete_col="__del")
 
     path = _materialize_once(spark, sf, "merge_rt", _write)
-    back = spark.read.parquet(path)
+    back = _read_parquet(spark, path)
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"), dsum("o_totalprice").alias("total")
     )
@@ -1459,8 +1461,11 @@ def reset_materialized() -> None:
     not cache query DataFrames across resets."""
     import shutil
 
+    from cubert_spark.catalog import _SCHEMAS
+
     for path in _MATERIALIZED.values():
         shutil.rmtree(path, ignore_errors=True)
+        _SCHEMAS.pop(path, None)  # written-schema memo of the dir
     _MATERIALIZED.clear()
     # Release prior constructions' localCheckpoint blocks (r16): the
     # ledger holds every checkpoint taken since the last reset; by

@@ -9,6 +9,19 @@ modulo local test sizing overridable by env vars:
 - ``SPARK_GRAFT_CPUS``   — local[*N*] parallelism (default 32).
 - ``SPARK_GRAFT_SHUFFLE``— spark.sql.shuffle.partitions (default 32
   locally; on a real cluster leave AQE coalescing to size it).
+
+A session compiles each generated class once. Spark's codegen cache
+holds 100 classes by default, while one pass over the declared and
+folded inventory at sf0.001 compiles 2,589 distinct ones, so with the
+default every pass re-compiled about 3,800 classes through Janino and
+the JIT warmed each up again. ``SCALE_DEFAULTS`` sizes the cache at
+4096, above that working set, and leaves the stage id out of generated
+class names, so a pipeline AQE numbers differently on a later run
+still hits the cache. Measured on local[4] with a 2 GB heap: a second
+inventory pass compiles 8 classes instead of 3,814, and the JVM's peak
+RSS over the two passes rises from 2.4 to 2.8 GB, the compiled classes
+it now keeps. :func:`codegen_compiles` reads the session's compile
+count.
 """
 
 from __future__ import annotations
@@ -48,6 +61,18 @@ SCALE_DEFAULTS: dict[str, str] = {
     # must broadcast rather than shuffle (Cubert: LOAD-CACHED /
     # DistributedCache, reference src/utils/FileCache.java:35).
     "spark.sql.autoBroadcastJoinThreshold": "33554432",
+    # Generated-class cache above the engine's working set: one pass
+    # over the inventory at sf0.001 compiles 2,589 distinct classes
+    # (about 2,150 with the stage id left out of class names, below);
+    # Spark's default of 100 re-compiles about 3,800 classes a pass.
+    # Static conf: Spark reads it once, when the JVM first generates code.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # The cache is keyed on the generated source. With the stage id in
+    # the class name, AQE's re-planning numbers the same pipeline
+    # differently from run to run (golden_record: 6 and then 4 classes
+    # compiled again on its second and third runs), so one pipeline
+    # took several entries and compiled again on later runs.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -95,6 +120,14 @@ def ensure_active_session(spark) -> None:
         spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(jss)
     except Exception:  # noqa: BLE001 - best-effort, connect-mode safe
         pass
+
+
+def codegen_compiles(spark) -> int:
+    """Janino compilations in this JVM so far (Spark's
+    ``CodegenMetrics.METRIC_COMPILATION_TIME`` count); the difference
+    across a query is the classes it compiled."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(cm.METRIC_COMPILATION_TIME().getCount())
 
 
 def warm_codegen(spark, query_fns, tiny_sf_dir: str, repeats: int = 3) -> float:

@@ -6,11 +6,13 @@ ledger. These tests pin the two properties the bench protocol's
 per-run reset depends on: every registered checkpoint actually
 releases (count == registered), and the JVM's persistent-RDD map is
 empty afterwards — so a Spark upgrade that silently breaks the chain
-fails HERE instead of as cross-run bench drift.
+fails HERE instead of as cross-run bench drift. The same release drops
+the labels connected_components caches for its run.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from cubert_spark import checkpoints
@@ -53,3 +55,21 @@ def test_release_checkpoints_counts_and_reports_failures(spark, capsys):
     assert released == 0
     assert checkpoints._RELEASE_FAILURES == before + 1
     assert "release_checkpoints failed" in capsys.readouterr().err
+
+
+def test_release_drops_connected_components_caches(spark):
+    from cubert_spark.datapipe.components import connected_components
+
+    checkpoints.release_checkpoints()
+    base_n = _n_persistent_rdds(spark)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id_a long, id_b long")
+    # union-find path twice, label-propagation path three times
+    for small_graph_edges in (2_000_000, 2_000_000, 0, 0, 0):
+        cc = connected_components(edges, small_graph_edges=small_graph_edges)
+        assert sorted(tuple(r) for r in cc.collect()) == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
+        cached = list(checkpoints._PERSISTED)
+        assert cached
+        checkpoints.release_checkpoints()
+        # <=: the ContextCleaner may reap an earlier test's RDD meanwhile
+        assert _n_persistent_rdds(spark) <= base_n
+        assert all(df.storageLevel == StorageLevel.NONE for df in cached)
